@@ -39,7 +39,8 @@ object LakeViewSync {
 
   /** T7 failure taxonomy (reference `MetadataExtractorUtils.java:12-30` +
     * `MetricsConstants.MetadataUploadFailureReasons`), mapped onto the
-    * Hadoop-FS exception surface instead of cloud-SDK exception classes.
+    * Hadoop-FS exception surface (and its `java.nio` equivalents from local
+    * sink writes) instead of cloud-SDK exception classes.
     */
   object FailureReason {
     val RateLimiting = "RATE_LIMITING"
@@ -50,8 +51,9 @@ object LakeViewSync {
     def classify(ex: Throwable): String = {
       // walk the cause chain like the reference's getCause checks
       Iterator.iterate(ex)(_.getCause).takeWhile(_ != null).take(8).map {
-        case _: java.io.FileNotFoundException => NoSuchKey
-        case _: org.apache.hadoop.security.AccessControlException => AccessDenied
+        case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => NoSuchKey
+        case _: org.apache.hadoop.security.AccessControlException |
+            _: java.nio.file.AccessDeniedException => AccessDenied
         case e if e.getMessage != null &&
           e.getMessage.toLowerCase.matches(".*(rate limit|slowdown|throttl|too many requests|429).*") =>
           RateLimiting

@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
 /** Per-(tableId, timelineType) checkpoint store (SURVEY §2.8 T2/T3, §2.1
   * S10/S11) — the engine-local replacement for the reference's checkpoint
   * API (`api/OnehouseApiClient.java:68-96`). Layout is one JSON file per
-  * key: `storeDir/<tableId>/<timelineType>.json`, written stage-then-rename.
+  * key: `storeDir/<tableId>/<timelineType>.json`, written stage-then-replace
+  * ([[upsert]]).
   *
   * The per-key layout is what makes the store scale- and concurrency-safe:
   * an upsert touches exactly one file regardless of table count (the
@@ -69,9 +70,12 @@ object CheckpointStore {
     fromJson(new String(bytes, Utf8))
   }
 
-  /** Upsert one checkpoint: write to a staging file, then rename over the
-    * target — a crash mid-write never leaves a truncated checkpoint (a stale
-    * one only re-mirrors one batch, which is idempotent by filename).
+  /** Upsert one checkpoint through [[SinkIO.publish]]: write a staging
+    * file, then replace the target with it. A crash mid-write never leaves a
+    * truncated checkpoint (a stale one only re-mirrors one batch, which is
+    * idempotent by filename). In a local store the replace is one atomic
+    * move, so there is no moment without a checkpoint; elsewhere it is
+    * delete-then-rename, and a failed rename throws.
     */
   def upsert(
       spark: SparkSession,
@@ -79,16 +83,9 @@ object CheckpointStore {
       tableId: String,
       timelineType: String,
       checkpoint: Checkpoint): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(s"${storeDir.stripSuffix("/")}/$tableId")
-    val fs = dir.getFileSystem(conf)
-    fs.mkdirs(dir)
-    val target = new Path(dir, s"$timelineType.json")
-    val staging = new Path(dir, s".$timelineType.json.staging")
-    val out = fs.create(staging, true)
-    try out.write(toJson(checkpoint).getBytes(Utf8)) finally out.close()
-    if (fs.exists(target)) fs.delete(target, false)
-    fs.rename(staging, target)
+    SinkIO.publish(spark.sparkContext.hadoopConfiguration,
+      new Path(s"${storeDir.stripSuffix("/")}/$tableId/$timelineType.json"),
+      toJson(checkpoint).getBytes(Utf8))
   }
 
   // ---- reference-compatible JSON codec ------------------------------------

@@ -35,15 +35,17 @@ object Retry {
     throw last
   }
 
-  /** Transient-vs-terminal split for the Hadoop-FS surface: a missing key is
-    * a state (the caller's sentinel/empty-listing semantics handle it) and
-    * denied access never heals on retry; everything else — socket resets,
-    * store 5xx/throttles surfaced as generic IOExceptions — is worth the
+  /** Transient-vs-terminal split for the Hadoop-FS surface and its `java.nio`
+    * equivalents (local sink writes, [[SinkIO]]): a missing key is a state
+    * (the caller's sentinel/empty-listing semantics handle it) and denied
+    * access never heals on retry; everything else — socket resets, store
+    * 5xx/throttles surfaced as generic IOExceptions — is worth the
     * reference's 3-attempt backoff (`AsyncHttpClientWithRetry.java:41-129`).
     */
   def transientStorageFault(e: Throwable): Boolean = e match {
-    case _: java.io.FileNotFoundException => false
-    case _: org.apache.hadoop.security.AccessControlException => false
+    case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => false
+    case _: org.apache.hadoop.security.AccessControlException |
+        _: java.nio.file.AccessDeniedException => false
     case _ => true
   }
 

@@ -6,7 +6,7 @@ import graft.model._
 import graft.sources.{FsListing, HoodiePropertiesReader, LsmManifestReader}
 import graft.functions.InstantFunctions
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** The mirror sink (SURVEY §7 step 7): copies selected timeline files into a
@@ -29,6 +29,15 @@ import org.apache.spark.sql.SparkSession
   * Copy IO runs where the listing rows live; at metadata scale (KB files)
   * the driver loop per table is the right altitude — tables fan out across
   * the driver's table batches exactly like the reference (G7, 20 per batch).
+  *
+  * Write path: each phase that copies files creates its destination
+  * directory (`<table>/archived`, `<table>/active`) once, then every file
+  * goes through [[SinkIO.copy]] — read through Hadoop from the lake,
+  * written with `java.nio` into a local mirror (no `chmod` fork, no `.crc`
+  * sidecar) or through the destination's `FileSystem` into an object store.
+  * A file is replaced in place, not staged: a crash mid-copy leaves a
+  * partial file that the next sync re-copies, because the checkpoint that
+  * would skip it is written only after the batch.
   */
 object TimelineMirror {
 
@@ -61,15 +70,15 @@ object TimelineMirror {
     if (lead.nonEmpty && lead.forall(_.isDigit)) Some(BigInt(lead)) else None
   }
 
+  /** Copy one file into `dstDir`, which [[mkdirs]] created for the phase. */
   private def copyFile(conf: Configuration, srcDir: String, name: String,
       dstDir: String): Unit = Retry.storageIO {
-    val src = new Path(s"${srcDir.stripSuffix("/")}/$name")
-    val dst = new Path(s"${dstDir.stripSuffix("/")}/$name")
-    val sfs = src.getFileSystem(conf)
-    val dfs = dst.getFileSystem(conf)
-    dfs.mkdirs(dst.getParent)
-    FileUtil.copy(sfs, src, dfs, dst, false, true, conf)
+    SinkIO.copy(conf, new Path(s"${srcDir.stripSuffix("/")}/$name"),
+      new Path(s"${dstDir.stripSuffix("/")}/$name"))
   }
+
+  private def mkdirs(conf: Configuration, dir: String): Unit =
+    Retry.storageIO(SinkIO.mkdirs(conf, new Path(dir)))
 
   /** Mirror one table's archived (V1) + active timelines, checkpointing
     * after every batch. Returns per-table results; the caller iterates its
@@ -114,6 +123,7 @@ object TimelineMirror {
         // T5 publish order: parquets -> manifest_N -> _version_ last, so a
         // mirror reader never sees a manifest referencing unmirrored files
         val ordered = toCopy ++ Seq(s"manifest_${current.version}", "_version_")
+        mkdirs(conf, s"$tableDst/archived")
         ordered.foreach { f => copyFile(conf, archDir, f, s"$tableDst/archived"); nFiles += 1 }
         nBatches += 1
         cp = cp.copy(lastArchivedManifestVersion = current.version)
@@ -142,6 +152,7 @@ object TimelineMirror {
         .filter(_._2 > lastIdx)
         .sortBy(_._2)
         .map(_._1)
+      if (files.nonEmpty) mkdirs(conf, s"$tableDst/archived")
       files.grouped(2).foreach { batch =>
         batch.foreach { f => copyFile(conf, archDir, f.filename, s"$tableDst/archived"); nFiles += 1 }
         nBatches += 1
@@ -182,6 +193,7 @@ object TimelineMirror {
     // TimelineCommitInstantsUploader.java:165-174)
     val result = ActiveTimelineBatcher.createBatches(listed, maxBatchSize,
       cp.copy(firstIncompleteCommitFile = null), strategy)
+    if (result.batches.nonEmpty) mkdirs(conf, s"$tableDst/active")
     result.batches.foreach { batch =>
       batch.foreach { f => copyFile(conf, activeDir, f.filename, s"$tableDst/active"); nFiles += 1 }
       nBatches += 1

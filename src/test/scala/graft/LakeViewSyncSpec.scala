@@ -277,6 +277,14 @@ class LakeViewSyncSpec extends AnyFunSuite {
     assert(FailureReason.classify(new java.io.IOException("503 SlowDown: throttled"))
       == FailureReason.RateLimiting)
     assert(FailureReason.classify(new IllegalStateException("boom")) == FailureReason.Unknown)
+    // the java.nio surface of local sink writes: terminal, and classified
+    // like its Hadoop equivalent
+    val noSuchFile = new java.nio.file.NoSuchFileException("x")
+    val denied = new java.nio.file.AccessDeniedException("x")
+    assert(FailureReason.classify(noSuchFile) == FailureReason.NoSuchKey)
+    assert(FailureReason.classify(new java.io.UncheckedIOException(denied)) == FailureReason.AccessDenied)
+    assert(!graft.operators.Retry.transientStorageFault(noSuchFile))
+    assert(!graft.operators.Retry.transientStorageFault(denied))
   }
 
   test("metrics registry records gauges, successes, and tagged failures (G11)") {

@@ -89,6 +89,41 @@ class ObjectStoreE2ESpec extends AnyFunSuite {
     assert(new String(bytes, 0, n, "UTF-8").contains("hoodie.table.name=trips"))
   }
 
+  test("a local mirror of the store is byte-identical to the all-store mirror") {
+    mkLake()
+    put(s"$bucket/lake/db1/trips/.hoodie/100.commit", """{"partitionToWriteStats":{"p":[]}}""")
+    put(s"$bucket/lake/db1/trips/.hoodie/archived/.commits_.archive.2_1-0-1", "archive-2")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val trips = TableDiscovery.discover(spark, Seq(base)).collect().head
+    val props = HoodiePropertiesReader.read(conf, s"${trips.absoluteTableUri}/.hoodie/hoodie.properties")
+    val local = java.nio.file.Paths.get("target/tmp/objectstore-local").toAbsolutePath
+    new Path(s"file://$local").getFileSystem(conf).delete(new Path(s"file://$local"), true)
+
+    // same source, two sinks: the store itself and a local file: root
+    val roots = Seq(bucket, s"file://$local")
+    val results = roots.map(r => TimelineMirror.mirrorTable(spark, trips, props,
+      s"$r/mirror", s"$r/checkpoints"))
+    assert(results.map(_.filesMirrored) == Seq(9, 9))
+
+    /** relative path -> bytes of every file under `dir`, read through Hadoop */
+    def tree(dir: String): Map[String, Seq[Byte]] = {
+      val root = new Path(dir)
+      val fs = root.getFileSystem(conf)
+      val it = fs.listFiles(root, true)
+      val prefix = fs.makeQualified(root).toUri.getPath
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath).map { p =>
+        val in = fs.open(p)
+        val bytes = try in.readAllBytes() finally in.close()
+        p.toUri.getPath.stripPrefix(prefix) -> bytes.toSeq
+      }.toMap
+    }
+    val Seq(store, file) = roots.map(r => tree(s"$r/mirror"))
+    assert(store.size == 9 && file == store)
+    assert(file(s"/${trips.tableId}/active/100.commit").map(_.toChar).mkString.contains("partitionToWriteStats"))
+    val Seq(storeCp, fileCp) = roots.map(r => CheckpointStore.load(spark, s"$r/checkpoints"))
+    assert(storeCp.nonEmpty && fileCp == storeCp)
+  }
+
   test("distributed listing reaches the store from executor tasks") {
     mkLake()
     // listDirs serializes the Hadoop conf (incl. fs.mocks3.impl) into the
