@@ -84,13 +84,15 @@ object Bench {
     // records can show. Artifact-only fields (never on stdout).
     val passTimes = scala.collection.mutable.Map.empty[String, Seq[Double]]
     val chunkOf = scala.collection.mutable.Map.empty[String, Int]
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     chunks.zipWithIndex.foreach { case (chunk, chunkIdx) =>
       val spark = newSession(cpus, sfDir)
       // Warm-up pass (untimed): JIT + codegen + parquet-footer caches make
       // the first execution of JSON-parse/join-heavy queries swing up to
       // 12x vs warm runs on identical code; timings below are warm.
-      for (_ <- 1 to warmups) chunk.foreach { case (_, fn) =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
+      for (_ <- 1 to warmups) chunk.foreach { case (name, fn) =>
+        try fn(spark, sfDir).count() catch { case e: Throwable =>
+          System.err.println(s"[bench] $name warm-up FAILED: ${String.valueOf(e.getMessage).take(200)}") }
         CacheTracker.releaseAll()
       }
       // Timed passes: min over SPARK_GRAFT_RUNS (default 2) executions per
@@ -108,13 +110,16 @@ object Bench {
           // are dead once its action finishes
           CacheTracker.releaseAll()
           if (verbose) System.err.println(f"[bench] $name%-28s $dt%8.2f s${if (ok) "" else " (FAILED)"}")
-          name -> dt
+          name -> (dt, ok)
         }.toMap
       }
+      // a row that threw in any timed pass has no result: it is listed as
+      // failed and kept out of `queries`, `total` and `drift_basket`
       chunk.foreach { case (name, _) =>
-        results(name) = passes.map(_(name)).min
-        passTimes(name) = passes.map(_(name))
+        passTimes(name) = passes.map(_(name)._1)
         chunkOf(name) = chunkIdx
+        if (passes.forall(_(name)._2)) results(name) = passTimes(name).min
+        else failed += name
       }
       // stop() removes the context's local shuffle/block dirs — the
       // residue that inflated late-sweep rows never reaches the next chunk
@@ -122,6 +127,7 @@ object Bench {
       org.apache.spark.sql.SparkSession.clearActiveSession()
       org.apache.spark.sql.SparkSession.clearDefaultSession()
     }
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Values rounded to 0.1 ms: bench noise dwarfs that, and the shorter
     // line survives tail-style output capture with every query present.
     def json(r: Map[String, Double]): String = {
@@ -145,7 +151,7 @@ object Bench {
       // cpus (round 12, additive): ties each artifact/line to its core
       // count — round 11's 8-core scaling run was only identifiable by
       // external forensics.
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,""" +
         s""""drift_basket":$basket,"drift_basket_n":${basketRows.size},""" +
         s""""eval_stride":${analytics.DedupQueries.EvalStride},""" +
         s""""cpus":$cpus,"sf":"$sfDir"}"""
@@ -185,7 +191,7 @@ object Bench {
     val basket = if (basketRows.size == DriftBasket.size)
       f"${basketRows.map(results).sum}%.4f" else "null"
     println(s"""{"metric":"bench_summary","total_sec":$total,""" +
-      s""""n_queries":${results.size},"drift_basket":$basket,""" +
+      s""""n_queries":${results.size},"failed":$failedJson,"drift_basket":$basket,""" +
       s""""eval_stride":${analytics.DedupQueries.EvalStride},"cpus":$cpus,""" +
       s""""sf":"$sfDir","artifact":"$out"}""")
   }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * groups (default 1000 x 33 = ~103k timeline files) and times the real
   * timeline dataflow over it:
   *
-  *   - discovery: BFS listing over every database dir (distributed);
+  *   - discovery: BFS listing over every database dir (driver-side pool);
   *   - full sync: [[jobs.LakeViewSync.runOnce]] — properties, batching,
   *     commit-atomic mirror, checkpoints, for every table;
   *   - resume: the same runOnce again — the incremental no-op path a

@@ -70,11 +70,21 @@ object LakeViewSync {
       failures: Map[String, String] = Map.empty) // tableUri -> FailureReason
 
   /** ONCE mode (reference JobRunMode.ONCE). */
-  def runOnce(spark: SparkSession, config: SyncConfig): SyncReport = {
-    val tables: Seq[HudiTable] =
-      TableDiscovery.discover(spark, config.basePaths, config.excludePatterns)
-        .collect().toSeq.sortBy(_.absoluteTableUri)
-    syncTables(spark, config, tables)
+  def runOnce(spark: SparkSession, config: SyncConfig,
+      metrics: SyncMetrics = SyncMetrics.global): SyncReport =
+    syncTables(spark, config, discoverTables(spark, config, metrics), metrics = metrics)
+
+  /** Discovery for both modes, sorted by uri. On success it sets the
+    * discovered-tables gauge and the discovery-duration gauge.
+    */
+  private def discoverTables(spark: SparkSession, config: SyncConfig,
+      metrics: SyncMetrics): Seq[HudiTable] = {
+    val t0 = System.nanoTime()
+    val tables = TableDiscovery.discover(spark, config.basePaths, config.excludePatterns)
+      .collect().toSeq.sortBy(_.absoluteTableUri)
+    metrics.discoveryDurationMsGauge.set((System.nanoTime() - t0) / 1000000)
+    metrics.tablesDiscoveredGauge.set(tables.size)
+    tables
   }
 
   /** Mirror a known table set: fixed-size batches, bounded parallelism
@@ -162,7 +172,7 @@ object LakeViewSync {
       cronSchedule: String = "0 */1 * * *",
       minIntervalMinutes: Int = 10,
       clock: Clock = Clock.systemUTC(),
-      runner: (SparkSession, SyncConfig) => SyncReport = runOnce): SyncReport = {
+      runner: (SparkSession, SyncConfig) => SyncReport = runOnce(_, _)): SyncReport = {
     val firstRunStart = clock.instant()
     def shouldRunAgain: Boolean = {
       val next = CronSchedule.nextExecution(CronSchedule.parse(cronSchedule), firstRunStart)
@@ -214,11 +224,9 @@ object LakeViewSync {
       */
     def discoverTick(): Unit =
       try {
-        val tables = TableDiscovery.discover(spark, config.basePaths, config.excludePatterns)
-          .collect().toSeq.sortBy(_.absoluteTableUri)
+        val tables = discoverTables(spark, config, metrics)
         propsCache.clear()
         lock.synchronized { tablesToProcess = tables }
-        metrics.tablesDiscoveredGauge.set(tables.size)
         metrics.inc(SyncMetrics.TableDiscoverySuccess)
       } catch {
         // a failed discovery keeps the previous table set (reference

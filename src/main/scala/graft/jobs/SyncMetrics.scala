@@ -6,14 +6,20 @@ import scala.collection.concurrent.TrieMap
 
 /** In-process metrics registry (G11/T7), mirroring the reference's metric
   * surface (`metrics/LakeViewExtractorMetrics.java:63-117`): counters keyed
-  * by name + optional failure-reason tag, and the two per-round gauges. An
-  * exporter (Prometheus, StatsD) would read [[snapshot]]; specs read it
-  * directly.
+  * by name + optional failure-reason tag, the two per-round gauges, and the
+  * duration of the last completed table discovery. An exporter
+  * (Prometheus, StatsD) would read [[snapshot]]; specs read it directly.
   */
 final class SyncMetrics {
   private val counters = TrieMap.empty[(String, String), LongAdder]
   val tablesDiscoveredGauge = new AtomicLong(0)
   val tablesProcessedGauge = new AtomicLong(0)
+  val discoveryDurationMsGauge = new AtomicLong(0)
+
+  private def gauges: Seq[(String, Long)] = Seq(
+    SyncMetrics.TablesDiscoveredGauge -> tablesDiscoveredGauge.get(),
+    SyncMetrics.TablesProcessedGauge -> tablesProcessedGauge.get(),
+    SyncMetrics.TableDiscoveryDurationMs -> discoveryDurationMsGauge.get())
 
   def inc(name: String, reasonTag: String = ""): Unit =
     counters.getOrElseUpdate((name, reasonTag), new LongAdder).increment()
@@ -21,13 +27,11 @@ final class SyncMetrics {
   def count(name: String, reasonTag: String = ""): Long =
     counters.get((name, reasonTag)).map(_.sum()).getOrElse(0L)
 
-  /** Counter totals keyed `name` or `name{reason=tag}`, plus both gauges. */
+  /** Counter totals keyed `name` or `name{reason=tag}`, plus the gauges. */
   def snapshot: Map[String, Long] =
     counters.readOnlySnapshot().map { case ((n, t), v) =>
       (if (t.isEmpty) n else s"$n{reason=$t}") -> v.sum()
-    }.toMap ++ Map(
-      SyncMetrics.TablesDiscoveredGauge -> tablesDiscoveredGauge.get(),
-      SyncMetrics.TablesProcessedGauge -> tablesProcessedGauge.get())
+    }.toMap ++ gauges
 
   /** Prometheus text exposition (format 0.0.4) of the registry — the
     * reference serves the same surface over HTTP
@@ -46,10 +50,7 @@ final class SyncMetrics {
             s"$name$lbl ${v.sum()}"
           }.sorted
       }
-    val gaugeLines = Seq(
-      SyncMetrics.TablesDiscoveredGauge -> tablesDiscoveredGauge.get(),
-      SyncMetrics.TablesProcessedGauge -> tablesProcessedGauge.get())
-      .sortBy(_._1)
+    val gaugeLines = gauges.sortBy(_._1)
       .flatMap { case (n, v) => Seq(s"# TYPE $n gauge", s"$n $v") }
     (counterLines ++ gaugeLines).mkString("", "\n", "\n")
   }
@@ -86,6 +87,7 @@ object SyncMetrics {
   val TableMetadataProcessingFailure = Prefix + "table_metadata_processing_failure"
   val TablesDiscoveredGauge = Prefix + "tables_discovered"
   val TablesProcessedGauge = Prefix + "tables_processed"
+  val TableDiscoveryDurationMs = Prefix + "table_discovery_duration_ms"
 
   /** Default registry used when callers don't supply one. */
   val global = new SyncMetrics

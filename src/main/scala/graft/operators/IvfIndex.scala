@@ -29,6 +29,9 @@ import org.apache.spark.sql.functions._
   */
 object IvfIndex {
 
+  /** Bumped on any layout change; part of the [[registryPath]] fingerprint. */
+  val FormatVersion = 1
+
   private[graft] def quantized(emb: DataFrame): DataFrame = {
     graft.functions.VectorExpressions.register(emb.sparkSession)
     graft.Tables.spread(emb, "vec_id")
@@ -202,19 +205,26 @@ object IvfIndex {
       fs.create(new Path(root, "_GRAFT_READY"), true).close()
     }
 
-  /** Deterministic per-corpus index location for registry queries: keyed by
-    * the embeddings table's (length, mtime) fingerprint, so a regenerated
-    * corpus gets a fresh index instead of probing stale vectors. Lives
-    * under the JVM temp dir — a cache, not a deliverable.
+  /** The string [[registryPath]] hashes: the embeddings table's (length,
+    * mtime), [[FormatVersion]] and the caller's tag.
     */
-  def registryPath(spark: SparkSession, dir: String, tag: String): String = {
+  private[graft] def fingerprint(spark: SparkSession, dir: String, tag: String): String = {
     val p = new Path(s"$dir/embeddings.parquet")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sum = fs.getContentSummary(p)
     val mtime = fs.getFileStatus(p).getModificationTime
-    val fp = s"$dir|${sum.getLength}|$mtime|$tag"
+    s"$dir|v$FormatVersion|${sum.getLength}|$mtime|$tag"
+  }
+
+  /** Deterministic per-corpus index location for registry queries: keyed by
+    * [[fingerprint]], so a regenerated corpus or a new index layout gets a
+    * fresh index instead of probing stale vectors. Lives under the JVM temp
+    * dir — a cache, not a deliverable.
+    */
+  def registryPath(spark: SparkSession, dir: String, tag: String): String = {
     val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(fp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
+      .digest(fingerprint(spark, dir, tag).getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(16)
     s"${System.getProperty("java.io.tmpdir")}/graft-ivf-index/$h"
   }
 

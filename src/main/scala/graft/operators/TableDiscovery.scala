@@ -1,8 +1,11 @@
 package graft.operators
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
 import graft.functions.InstantFunctions
-import graft.model.HudiTable
-import graft.sources.{FsListing, SerializableConfiguration}
+import graft.model.{FileEntry, HudiTable}
+import graft.sources.FsListing
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Recursive Hudi-table discovery (SURVEY §2.2 D1-D5). Reference semantics
@@ -18,14 +21,16 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *     java.util.UUID.nameUUIDFromBytes);
   *   - results are deduplicated across base paths (D4).
   *
-  * Execution shape: level-synchronous BFS. Each level's directory frontier
-  * is distributed across executors (one listing task per directory batch,
-  * see [[FsListing.listDirs]]); only the classification survivors return to
-  * the driver. At 100k tables / millions of dirs the frontier per level
-  * stays collect-able (dir uris + a boolean), and listing IO — the actual
-  * cost — is fully parallel.
+  * Execution shape: level-synchronous BFS on the driver. Each level's
+  * frontier is listed by a bounded thread pool, one [[FsListing.listDir]]
+  * call per directory and at most 64 in flight (the reference runs one
+  * future per directory). No Spark job runs: a listing is one small
+  * metadata call, far cheaper than the scheduling, shuffle and planning of
+  * a job per level (SURVEY "Driver-loop vs DataFrame boundary").
   */
 object TableDiscovery {
+
+  private val MaxListingThreads = 64
 
   /** One configured base path (reference config Database.basePaths). */
   final case class BasePath(
@@ -49,14 +54,27 @@ object TableDiscovery {
   private def excluded(uri: String, patterns: Seq[String]): Boolean =
     patterns.exists(p => uri.matches(p))
 
+  /** List one BFS level concurrently, in `uris` order. A failed listing
+    * rethrows its own storage exception, not the pool's wrapper.
+    */
+  private def listLevel(conf: Configuration, uris: Seq[String]): Seq[Seq[FileEntry]] = {
+    val pool = Executors.newFixedThreadPool(math.min(uris.size, MaxListingThreads))
+    try {
+      uris
+        .map(uri => pool.submit(new Callable[Seq[FileEntry]] {
+          def call(): Seq[FileEntry] = FsListing.listDir(conf, uri)
+        }))
+        .map(f => try f.get() catch { case e: ExecutionException => throw e.getCause })
+    } finally pool.shutdownNow()
+  }
+
   /** Discover all Hudi tables under the given base paths. */
   def discover(
       spark: SparkSession,
       basePaths: Seq[BasePath],
       excludePatterns: Seq[String] = Nil): Dataset[HudiTable] = {
     import spark.implicits._
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    val excludes = excludePatterns
+    val conf = spark.sparkContext.hadoopConfiguration
 
     // tables are tagged with the base-path config they were discovered from:
     // a `path#tableId` pin applies AFTER discovery and only when the path
@@ -65,39 +83,19 @@ object TableDiscovery {
     val found = Seq.newBuilder[(String, HudiTable)]
 
     var frontier: Seq[Dir] = basePaths
-      .filterNot(bp => excluded(bp.cleanUri, excludes))
+      .filterNot(bp => excluded(bp.cleanUri, excludePatterns))
       .map(bp => Dir(bp.lakeName, bp.databaseName, bp.cleanUri, bp.uri))
 
     while (frontier.nonEmpty) {
-      val byUri = frontier.map(d => d.uri -> d).toMap
-      // distribute the level's listings; classify on executors, collect survivors
-      val listed: Array[(String, Boolean, Seq[String])] =
-        spark.createDataset(frontier.map(_.uri))
-          .repartition(math.max(1, math.min(frontier.size, 64)))
-          .mapPartitions { uris =>
-            val c = conf.value
-            uris.map { uri =>
-              val entries = FsListing.listDir(c, uri)
-              val isTable = entries.exists(_.filename.startsWith(".hoodie"))
-              val subdirs =
-                if (isTable) Nil
-                else entries.filter(_.isDirectory).map(e => s"$uri/${e.filename}")
-              (uri, isTable, subdirs)
-            }
-          }
-          .collect()
-
-      val next = Seq.newBuilder[Dir]
-      listed.foreach { case (uri, isTable, subdirs) =>
-        val d = byUri(uri)
-        if (isTable) {
-          found += d.origin -> HudiTable(uri, d.db, d.lake, InstantFunctions.uuidV3(uri))
-        } else {
-          subdirs.filterNot(s => excluded(s, excludes))
-            .foreach(s => next += Dir(d.lake, d.db, s, d.origin))
-        }
+      frontier = frontier.zip(listLevel(conf, frontier.map(_.uri))).flatMap {
+        case (d, entries) if entries.exists(_.filename.startsWith(".hoodie")) =>
+          found += d.origin -> HudiTable(d.uri, d.db, d.lake, InstantFunctions.uuidV3(d.uri))
+          Nil
+        case (d, entries) =>
+          entries.filter(_.isDirectory).map(e => s"${d.uri}/${e.filename}")
+            .filterNot(excluded(_, excludePatterns))
+            .map(s => Dir(d.lake, d.db, s, d.origin))
       }
-      frontier = next.result()
     }
 
     val pinnedIdByOrigin = basePaths
@@ -110,6 +108,7 @@ object TableDiscovery {
         case None => ts.map(_._2)
       }
     }
-    spark.createDataset(tables).distinct()
+    // a local relation: collecting it starts no job
+    spark.createDataset(tables.distinct)
   }
 }

@@ -22,10 +22,12 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *   - filenames are returned relative to the listed directory
   *     (prefix-stripped, like the reference's File model).
   *
-  * At scale the fan-out happens in [[listDirs]]: directories are distributed
-  * across executors and each task drains its directory's pages through the
-  * store's own iterator — the driver never holds more than the collected
-  * survivors of one BFS level.
+  * Table discovery calls [[listDir]] from a bounded driver-side pool, one
+  * call per directory of a BFS level (see `TableDiscovery`): a listing is
+  * too small to pay for a Spark job. [[listDirs]] distributes a large,
+  * known directory set across executors instead, for bulk listings whose
+  * entries are consumed as a Dataset (e.g. `TimelineLakeBench`'s listing of
+  * a mirrored lake).
   */
 object FsListing {
 

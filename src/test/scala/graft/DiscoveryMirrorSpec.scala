@@ -95,6 +95,40 @@ class DiscoveryMirrorSpec extends AnyFunSuite {
     assert(deep.head.absoluteTableUri.endsWith("/users"))
   }
 
+  test("discovery runs no Spark job and dedups a table reached from two base paths") {
+    mkLake()
+    val sc = spark.sparkContext
+    val group = s"discovery-no-jobs-${java.util.UUID.randomUUID()}"
+    // job descriptions of the group's jobs, in start order
+    val jobs = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "discovery job count")
+    try {
+      val tables = TableDiscovery.discover(spark, Seq(base), Seq(".*/scratch")).collect()
+      assert(tables.map(_.absoluteTableUri.split("/").last).sorted.toSeq == Seq("trips", "users"))
+      // D4: the nested base path reaches `users` again; it is one row
+      val nested = base.copy(uri = base.uri + "/nested")
+      val both = TableDiscovery.discover(spark, Seq(base, nested), Seq(".*/scratch")).collect()
+      assert(both.toSet == tables.toSet && both.length == 2)
+      // a sentinel job in the same group: the listener sees jobs in start
+      // order, so every job discovery started arrives before the sentinel
+      sc.setJobDescription("sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val before = Iterator.continually(jobs.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile { d => assert(d != null, "listener never saw the sentinel job"); d != "sentinel" }
+        .toList
+      assert(before.isEmpty, s"discovery started Spark jobs: $before")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("manifest reader: whitespace version, unknown JSON fields, empty files, missing manifest") {
     // ports LSMTimelineManifestReaderTest corner cases: _version_ parses
     // with surrounding whitespace, unknown manifest fields are ignored,

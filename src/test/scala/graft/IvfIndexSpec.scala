@@ -16,6 +16,14 @@ class IvfIndexSpec extends AnyFunSuite {
 
   private def emb = Tables.t(spark, sf, "embeddings").select("vec_id", "embedding")
 
+  test("registryPath fingerprint carries the format version") {
+    val fp = IvfIndex.fingerprint(spark, sf, "t")
+    assert(fp.split('|').contains(s"v${IvfIndex.FormatVersion}"), fp)
+    assert(IvfIndex.registryPath(spark, sf, "t").endsWith(
+      java.security.MessageDigest.getInstance("MD5").digest(fp.getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString.take(16)))
+  }
+
   test("probe equals the unpruned reference and prunes partitions") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_index").toString
     IvfIndex.build(emb, dir, nCells = 8, iters = 2)

@@ -29,6 +29,26 @@ object FlakyFileSystem {
     }
 }
 
+/** Local FS whose `listStatus` throws `AccessControlException` for any path
+  * under [[DeniedListingFileSystem.deniedUnder]] (none while it is null):
+  * a permission fault in discovery. Registered under `denied://` via
+  * `fs.denied.impl`.
+  */
+class DeniedListingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "denied"
+  override def getUri: java.net.URI = java.net.URI.create("denied:///")
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    val under = DeniedListingFileSystem.deniedUnder.get()
+    if (under != null && f.toUri.getPath.startsWith(under))
+      throw new org.apache.hadoop.security.AccessControlException(s"listing denied: $f")
+    super.listStatus(f)
+  }
+}
+
+object DeniedListingFileSystem {
+  val deniedUnder = new java.util.concurrent.atomic.AtomicReference[String](null)
+}
+
 /** The library entry point end-to-end: discovery -> properties -> mirror for
   * a multi-table lake in one call, with per-table failure isolation.
   */
@@ -317,6 +337,73 @@ class LakeViewSyncSpec extends AnyFunSuite {
     assert(m.count(SyncMetrics.TableSyncFailure) == 1)
     assert(m.tablesProcessedGauge.get() == 1)
     assert(m.snapshot.contains("lakeView_table_metadata_processing_failure{reason=NO_SUCH_KEY}"))
+  }
+
+  test("a failed discovery tick keeps its cause and the previous table set") {
+    import graft.jobs.SyncMetrics
+    val droot = s"$root-denied"
+    Seq(droot, s"$droot-mirror", s"$droot-cp").foreach(rmTree)
+    for ((db, t) <- Seq("db1" -> "alpha", "db2" -> "beta")) {
+      write(s"$droot/$db/$t/.hoodie/hoodie.properties",
+        s"hoodie.table.name=$t\nhoodie.table.type=COPY_ON_WRITE\n")
+      Seq("100.commit.requested", "100.commit.inflight", "100.commit")
+        .foreach(f => write(s"$droot/$db/$t/.hoodie/$f"))
+    }
+    spark.sparkContext.hadoopConfiguration.setClass("fs.denied.impl",
+      classOf[DeniedListingFileSystem], classOf[org.apache.hadoop.fs.FileSystem])
+    val abs = Paths.get(droot).toAbsolutePath.toString
+    val bases = Seq("db1", "db2").map(db =>
+      TableDiscovery.BasePath("lake", db, s"denied://$abs/$db"))
+    val cfg = LakeViewSync.SyncConfig(basePaths = bases,
+      mirrorRoot = s"$droot-mirror", checkpointDir = s"$droot-cp")
+    val m = new SyncMetrics
+    val cs = new LakeViewSync.ContinuousSync(spark, cfg, metrics = m)
+
+    DeniedListingFileSystem.deniedUnder.set(null)
+    cs.discoverTick()
+    assert(m.tablesDiscoveredGauge.get() == 2)
+    assert(m.count(SyncMetrics.TableDiscoverySuccess) == 1)
+
+    DeniedListingFileSystem.deniedUnder.set(s"$abs/db2")
+    try {
+      // discovery rethrows the listing's own exception, not a pool wrapper
+      intercept[org.apache.hadoop.security.AccessControlException](
+        TableDiscovery.discover(spark, bases))
+      cs.discoverTick()
+    } finally DeniedListingFileSystem.deniedUnder.set(null)
+    assert(m.count(SyncMetrics.TableDiscoveryFailure,
+      LakeViewSync.FailureReason.AccessDenied) == 1, m.snapshot.toString)
+    assert(m.count(SyncMetrics.TableDiscoverySuccess) == 1)
+    assert(m.tablesDiscoveredGauge.get() == 2)
+    // the upload run still covers both previously discovered tables
+    val r = cs.processTick()
+    assert(r.exists(rep => rep.tablesDiscovered == 2 && rep.tablesSynced == 2), r.toString)
+  }
+
+  test("runOnce sets the discovered-tables and discovery-duration gauges") {
+    import graft.jobs.SyncMetrics
+    val groot = s"$root-gauges"
+    Seq(groot, s"$groot-mirror", s"$groot-cp").foreach(rmTree)
+    for (t <- Seq("one", "two", "three")) {
+      write(s"$groot/db/$t/.hoodie/hoodie.properties",
+        s"hoodie.table.name=$t\nhoodie.table.type=COPY_ON_WRITE\n")
+      Seq("100.commit.requested", "100.commit.inflight", "100.commit")
+        .foreach(f => write(s"$groot/db/$t/.hoodie/$f"))
+    }
+    val base = TableDiscovery.BasePath("lake", "db",
+      s"file:///${Paths.get(groot).toAbsolutePath.toString.stripPrefix("/")}/db")
+    val cfg = LakeViewSync.SyncConfig(basePaths = Seq(base),
+      mirrorRoot = s"$groot-mirror", checkpointDir = s"$groot-cp")
+    val m = new SyncMetrics
+    m.discoveryDurationMsGauge.set(-1)
+    val t0 = System.nanoTime()
+    val r = LakeViewSync.runOnce(spark, cfg, m)
+    val wallMs = (System.nanoTime() - t0) / 1000000
+    assert(r.allSucceeded && r.tablesSynced == 3)
+    assert(m.tablesDiscoveredGauge.get() == 3 && m.tablesProcessedGauge.get() == 3)
+    val d = m.discoveryDurationMsGauge.get()
+    assert(d >= 0 && d <= wallMs, s"discovery $d ms of a $wallMs ms run")
+    assert(m.prometheus.split("\n").contains(s"${SyncMetrics.TableDiscoveryDurationMs} $d"))
   }
 
   test("a failing table isolates and is reported with a reason; healthy tables still sync") {

@@ -15,6 +15,7 @@ class SyncMetricsSpec extends AnyFunSuite {
     m.inc(SyncMetrics.TableMetadataProcessingFailure, "NO_SUCH_KEY")
     m.inc(SyncMetrics.TableMetadataProcessingFailure, "RATE_LIMITING")
     m.tablesDiscoveredGauge.set(7)
+    m.discoveryDurationMsGauge.set(42)
     val text = m.prometheus
     val lines = text.split("\n").toSeq
     // each family has exactly one TYPE line, before its samples
@@ -30,6 +31,9 @@ class SyncMetricsSpec extends AnyFunSuite {
     assert(lines.contains(s"# TYPE ${SyncMetrics.TablesDiscoveredGauge} gauge"))
     assert(lines.contains(s"${SyncMetrics.TablesDiscoveredGauge} 7"))
     assert(lines.contains(s"${SyncMetrics.TablesProcessedGauge} 0"))
+    assert(lines.contains(s"# TYPE ${SyncMetrics.TableDiscoveryDurationMs} gauge"))
+    assert(lines.contains(s"${SyncMetrics.TableDiscoveryDurationMs} 42"))
+    assert(m.snapshot(SyncMetrics.TableDiscoveryDurationMs) == 42)
     // every sample line parses as "name{labels}? value"
     lines.filterNot(_.startsWith("#")).filter(_.nonEmpty).foreach { l =>
       assert(l.matches("""[A-Za-z_][A-Za-z0-9_]*(\{reason="[A-Z_]+"\})? \d+"""), l)
